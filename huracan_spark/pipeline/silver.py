@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +53,14 @@ __all__ = ["SilverTable", "MergeMetrics", "CommitConflict", "ConstraintViolation
 #: copies sub-dicts before mutating).
 _MANIFEST_CACHE: dict[tuple[str, int, int], dict] = {}
 _MANIFEST_CACHE_MAX = 64
+
+#: ``read()``'s reconciled snapshot of each table's CURRENT generation,
+#: when that generation has merge-on-read deltas or deletion vectors:
+#: (SparkContext, abs table path) -> (generation, persisted DataFrame).
+#: At most one entry per table per context; a read that sees a newer
+#: generation unpersists the old one.
+_SNAPSHOTS: dict[tuple, tuple[str, DataFrame]] = {}
+_SNAPSHOTS_LOCK = threading.Lock()
 
 
 class ConstraintViolation(ValueError):
@@ -147,8 +156,6 @@ class SilverTable:
     _LOCK_HEARTBEAT_SECS = 60.0
 
     def _acquire_commit_lock(self, timeout: float = 120.0) -> "_LockHandle":
-        import threading
-
         lock = os.path.join(self.path, "_COMMIT_LOCK")
         deadline = time.monotonic() + timeout
         while True:
@@ -1034,28 +1041,27 @@ class SilverTable:
             rels.extend(ds)
         return rels
 
-    def _reconcile_frames(self, frames) -> DataFrame:
-        """Fold base + delta layers into current state with EXACTLY the
-        merge_into total order: highest ``(version_, tombstone-prec)``
-        wins; at a full tie the EARLIEST commit wins (base beats delta
-        1 beats delta 2 — the multi-layer generalization of
-        merge_into's stored-side precedence, so merge-on-read and
-        copy-on-write converge bit-identically).  ``frames`` is a list
-        of ``(df, commit_seq)``."""
-        unioned = None
-        for df, seq in frames:
-            t = df.withColumn("_seq", F.lit(seq))
-            unioned = t if unioned is None else unioned.unionByName(t)
-        cols = [c for c in unioned.columns if c != "_seq"]
+    def _reconcile(self, layers: DataFrame) -> DataFrame:
+        """Fold one scan of base + delta layers (``_seq``: 0 for the
+        base, i for a bucket's i-th delta) into current state with
+        EXACTLY the merge_into total order: highest ``(version_,
+        tombstone-prec)`` wins; at a full tie the EARLIEST commit wins
+        (base beats delta 1 beats delta 2 — the multi-layer
+        generalization of merge_into's stored-side precedence, so
+        merge-on-read and copy-on-write converge bit-identically)."""
+        cols = [c for c in layers.columns if c != "_seq"]
         order = ["version_"]
-        if "deleted" in unioned.columns:
-            unioned = unioned.withColumn(
-                "_del_prec", F.coalesce(F.col("deleted").cast("int"), F.lit(0))
+        extra = []
+        if "deleted" in layers.columns:
+            extra.append(
+                F.coalesce(F.col("deleted").cast("int"), F.lit(0)).alias(
+                    "_del_prec"
+                )
             )
             order.append("_del_prec")
-        unioned = unioned.withColumn("_neg_seq", -F.col("_seq"))
+        extra.append((-F.col("_seq")).alias("_neg_seq"))
         order.append("_neg_seq")
-        out = latest_state(unioned, "_id", order)
+        out = latest_state(layers.select("*", *extra), "_id", order)
         return out.select(*cols)
 
     def _bucket_state(
@@ -1067,7 +1073,7 @@ class SilverTable:
         extra shuffle); DV-only buckets add one broadcast overlay join
         (still no shuffle — each key is stored once in a COW bucket, so
         the overlaid row IS final); only delta'd buckets pay the
-        reconciliation reduce."""
+        reconciliation reduce, over ONE scan of all their layers."""
         manifest = self.manifest(generation)
         deltas = self.deltas(generation)
         dvs = self.dvs(generation)
@@ -1103,27 +1109,25 @@ class SilverTable:
                 )
             )
         if mor:
+            # every layer of every delta'd bucket in ONE scan; a row's
+            # commit sequence is its data dir's place in the bucket's
+            # layer list (base 0, i-th delta i)
+            seq = {}
+            for b in mor:
+                if b in manifest:
+                    seq[manifest[b]] = 0
+                for i, rel in enumerate(deltas[b]):
+                    seq[rel] = i + 1
             # overlay BEFORE the reconciliation reduce: a DV-marked row
             # competes as its tombstone image, exactly as if the cow
             # delete had rewritten it into that layer
             mor_dv = [r for b in mor if b in dvs for r in dvs[b]]
-
-            def _rd(rels):
-                df = self._read_buckets(
-                    rels, schema=schema, with_pos=bool(mor_dv)
-                )
-                return self._apply_dv(df, mor_dv) if mor_dv else df
-
-            frames = []
-            base = [manifest[b] for b in mor if b in manifest]
-            if base:
-                frames.append((_rd(base), 0))
-            depth = max(len(deltas[b]) for b in mor)
-            for i in range(depth):
-                layer = [deltas[b][i] for b in mor if len(deltas[b]) > i]
-                if layer:
-                    frames.append((_rd(layer), i + 1))
-            parts.append(self._reconcile_frames(frames))
+            layers = self._read_buckets(
+                list(seq), schema=schema, with_pos=bool(mor_dv), seq=seq
+            )
+            if mor_dv:
+                layers = self._apply_dv(layers, mor_dv)
+            parts.append(self._reconcile(layers))
         if not parts:
             return None
         out = parts[0]
@@ -1132,10 +1136,34 @@ class SilverTable:
         return self._to_logical(out, cmap)
 
     def read(self, generation: str | None = None) -> DataFrame | None:
-        gen = generation or self.current_generation()
-        if gen is None:
-            return None
-        return self._bucket_state(gen)
+        """Current state (or ``generation``'s, for time travel).  A
+        current generation with merge-on-read deltas or deletion
+        vectors is reconciled ONCE per process: every read of it
+        returns the same lazily persisted DataFrame, shared by all
+        handles on the table, and the first read that sees a newer
+        generation unpersists it.  Pure copy-on-write generations and
+        explicit ``generation`` reads stay lazy, so filters keep
+        pushing down into the parquet scan."""
+        if generation is not None:
+            return self._bucket_state(generation)
+        gen = self.current_generation()
+        key = (self.spark.sparkContext, os.path.abspath(self.path))
+        with _SNAPSHOTS_LOCK:
+            for k in [k for k in _SNAPSHOTS if k[0]._jsc is None]:
+                del _SNAPSHOTS[k]  # its SparkContext stopped
+            held = _SNAPSHOTS.get(key)
+            if held is not None:
+                if held[0] == gen:
+                    return held[1]
+                del _SNAPSHOTS[key]
+                held[1].unpersist()
+            if gen is None:
+                return None
+            state = self._bucket_state(gen)
+            if state is not None and (self.deltas(gen) or self.dvs(gen)):
+                state = state.persist()
+                _SNAPSHOTS[key] = (gen, state)
+            return state
 
     def read_as_of(self, ts_ms: int) -> DataFrame | None:
         """Timestamp time travel (``AS OF TIMESTAMP``): read the newest
@@ -1429,8 +1457,12 @@ class SilverTable:
         return self._alter_schema_commit(mutate, "DROP COLUMN", column=col)
 
     def _read_buckets(
-        self, rel_paths, schema=None, with_pos: bool = False
+        self, rel_paths, schema=None, with_pos: bool = False, seq=None
     ) -> DataFrame:
+        """One parquet scan of the given bucket data dirs.  ``with_pos``
+        adds the deletion-vector key ``(_dv_file, _dv_pos)``; ``seq``
+        (data dir -> commit sequence) adds each row's ``_seq`` from the
+        ``generation/_bucket=K`` dir it was read from."""
         paths = [os.path.join(self.path, p) for p in rel_paths]
         if not paths:
             raise ValueError("empty silver manifest has no schema to read")
@@ -1443,21 +1475,34 @@ class SilverTable:
             # pre-schema-manifest fallback: merge footers across buckets
             # so evolved columns still surface (Delta's read behavior)
             df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        # both keys derive from the trailing components of the absolute
+        # _metadata.file_path — stable under table relocation (clone)
+        # and URI-scheme differences
+        file_path = F.col("_metadata.file_path")
+        extra = []
         if with_pos:
-            # deletion-vector key: the last three path components
-            # (generation/_bucket=K/file.parquet) — stable under table
-            # relocation (clone) and URI-scheme differences, unlike the
-            # absolute _metadata.file_path it derives from
-            df = df.select(
-                "*",
-                F.regexp_extract(
-                    F.col("_metadata.file_path"),
-                    r"([^/]+/[^/]+/[^/]+)$",
-                    1,
-                ).alias("_dv_file"),
-                F.col("_metadata.row_index").alias("_dv_pos"),
+            # deletion-vector key: generation/_bucket=K/file.parquet
+            extra.append(
+                F.regexp_extract(file_path, r"([^/]+/[^/]+/[^/]+)$", 1).alias(
+                    "_dv_file"
+                )
             )
-        return df
+            extra.append(F.col("_metadata.row_index").alias("_dv_pos"))
+        if seq:
+            # one SQL map literal, parsed in one JVM call (a lit() per
+            # entry would cost a round trip each).  Data dirs are
+            # table-minted names (gen-<ms>[-NNN]/_bucket=K): no quotes
+            layer = F.expr(
+                "map("
+                + ", ".join(f"'{rel}', {s}" for rel, s in sorted(seq.items()))
+                + ")"
+            )
+            extra.append(
+                layer[
+                    F.regexp_extract(file_path, r"([^/]+/[^/]+)/[^/]+$", 1)
+                ].alias("_seq")
+            )
+        return df.select("*", *extra) if extra else df
 
     def _dv_frame(self, dv_rels) -> DataFrame:
         """The (file, position) marks of the given sidecar dirs.  No
@@ -2020,7 +2065,9 @@ class SilverTable:
                         self.n_buckets = persisted
                 cmap = self.colmap(current_gen)
                 prev_raw = self._manifest_raw(current_gen)
-                state = self.read().withColumn("_bucket", self._bucket_col())
+                state = self._bucket_state(current_gen).withColumn(
+                    "_bucket", self._bucket_col()
+                )
                 gen, out = self._claim_generation()
                 clustered = state.repartition(self.n_buckets, "_bucket")
                 if cluster_by:

@@ -205,7 +205,7 @@ def _load_state(table_path: str, refs, columns, colmap=None) -> dict:
     merge-on-read delta layer folded with the merge_into total order —
     a later layer's row wins only on a STRICTLY higher
     (version, tombstone) key, so the earliest commit wins full ties,
-    exactly like SilverTable._reconcile_frames.  Deletion vectors
+    exactly like SilverTable._reconcile.  Deletion vectors
     overlay each layer BEFORE the fold (a marked row competes as its
     tombstone image), exactly like SilverTable._bucket_state."""
     base_rel, delta_rels, dv_rels = refs

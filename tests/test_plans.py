@@ -335,3 +335,47 @@ def test_completed_ranges_no_single_partition_window(spark, sf_dir):
     # the island row-number window must be partitioned (by _pid)
     for frag in p.split("windowspecdefinition(")[1:]:
         assert frag.split(",")[0].strip().startswith("_pid"), frag[:80]
+
+
+def _mor_tailed_silver(spark, path, depth):
+    """Every bucket merge-on-read: a base plus ``depth`` delta layers."""
+    from huracan_spark.pipeline.silver import SilverTable
+
+    schema = "_id string, version_ long, deleted boolean, val long"
+    t = SilverTable(spark, path, n_buckets=2)
+    t.merge(spark.createDataFrame([(f"k{i}", 1, False, i) for i in range(8)], schema))
+    for v in range(2, depth + 2):
+        t.merge(
+            spark.createDataFrame([(f"k{i}", v, False, i) for i in range(8)], schema),
+            write_mode="mor",
+        )
+    return t
+
+
+def test_mor_fold_is_one_scan_one_exchange(spark, tmp_path):
+    """Reconciling a merge-on-read generation reads the base and every
+    delta layer in ONE parquet scan and folds with one shuffle — not a
+    scan per layer."""
+    t = _mor_tailed_silver(spark, str(tmp_path / "t"), depth=3)
+    gen = t.current_generation()
+    assert set(t.deltas(gen)) == {"0", "1"}
+    assert max(len(d) for d in t.deltas(gen).values()) == 3
+    p = t._bucket_state(gen)._jdf.queryExecution().executedPlan().toString()
+    assert p.count("FileScan parquet") == 1
+    assert p.count("Exchange") == 1
+
+
+def test_cow_read_stays_lazy_and_pushes_id(spark, tmp_path):
+    """A pure copy-on-write read is not persisted, so a point lookup's
+    ``_id`` equality still reaches the parquet scan."""
+    from pyspark import StorageLevel
+
+    from huracan_spark.api import ObjectsApi
+
+    t = _mor_tailed_silver(spark, str(tmp_path / "t"), depth=1)
+    t.compact()
+    df = t.read()
+    assert not df.is_cached and df.storageLevel == StorageLevel.NONE
+    p = ObjectsApi(df).object("k3")._jdf.queryExecution().executedPlan().toString()
+    pushed = [ln for ln in p.splitlines() if "PushedFilters" in ln]
+    assert pushed and "EqualTo(_id,k3)" in pushed[0]

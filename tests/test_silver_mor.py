@@ -8,7 +8,7 @@ from __future__ import annotations
 import os
 import time
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -214,6 +214,13 @@ def test_mor_merge_metrics(spark, tmp_path):
     assert (m.inserted, m.modified, m.unchanged) == (1, 1, 1)
 
 
+def _full_state(t):
+    df = t.read()
+    cols = sorted(df.columns)
+    rows = [tuple(r[c] for c in cols) for r in df.collect()]
+    return cols, sorted(rows, key=repr)
+
+
 @settings(
     deadline=None,
     max_examples=6,
@@ -234,33 +241,93 @@ def test_mor_merge_metrics(spark, tmp_path):
         max_size=4,
     ),
     modes=st.lists(st.booleans(), min_size=4, max_size=4),
+    # batches from this index on carry an added column (null fill)
+    extra_from=st.integers(min_value=0, max_value=4),
+    # (after batch i, delete val < T): cow rewrite vs deletion vector
+    delete_at=st.one_of(
+        st.none(),
+        st.tuples(
+            st.integers(min_value=0, max_value=3),
+            st.integers(min_value=0, max_value=400),
+        ),
+    ),
+    # after batch i, rename val -> amount (column mapping) on both
+    rename_at=st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
+)
+# all merge-on-read: k0's bucket reaches delta depth 3; the delete
+# after batch 2 marks k3's row in the BASE and k1's in delta 1, and
+# batch 3 stacks a delta above the marked files; batches 2-3 add a
+# column under a renamed payload column
+@example(
+    batches=[
+        [(0, 1, False), (1, 1, False), (2, 1, False), (3, 1, False)],
+        [(0, 2, False), (1, 2, False)],
+        [(0, 3, False), (2, 2, False)],
+        [(0, 4, False)],
+    ],
+    modes=[True, True, True, True],
+    extra_from=2,
+    delete_at=(2, 150),
+    rename_at=1,
+)
+# the same depth with full ties across layers (k3 v1 base vs delta 1,
+# k2 v2 delta 2 vs delta 3: the earlier layer wins) and a closing
+# delete that marks every live row, without column mapping
+@example(
+    batches=[
+        [(0, 1, False), (1, 1, False), (2, 1, False), (3, 1, False)],
+        [(0, 2, False), (1, 2, True), (3, 1, False)],
+        [(0, 3, False), (2, 2, False)],
+        [(0, 4, False), (2, 2, False)],
+    ],
+    modes=[True, True, True, True],
+    extra_from=1,
+    delete_at=(3, 400),
+    rename_at=None,
 )
 def test_cow_and_mor_converge_bit_identically(
-    spark, tmp_path_factory, batches, modes
+    spark, tmp_path_factory, batches, modes, extra_from, delete_at, rename_at
 ):
     """ANY batch sequence (duplicate versions, same-version tombstone
-    flips, interleaved modes) produces the same final state under
+    flips, interleaved modes, an added column, a deletion-vector
+    DELETE, a column rename) produces the same final state under
     merge-on-read as under pure copy-on-write — the reconciliation
-    total order is exactly merge_into's."""
+    total order is exactly merge_into's — and compacting the
+    merge-on-read table changes nothing."""
     root = tmp_path_factory.mktemp("morprop")
     cow = SilverTable(spark, str(root / "cow"), n_buckets=2)
     mor = SilverTable(spark, str(root / "mor"), n_buckets=2)
+    col = "val"
     for i, b in enumerate(batches):
+        extra = i >= extra_from
+        schema = f"_id string, version_ long, deleted boolean, {col} long"
         # payload encodes the batch index, so equal-version ties across
         # batches carry DIFFERENT payloads — the earliest-commit-wins
         # tie rule is observable, not vacuous
-        rows = _rows(
-            spark,
-            [
-                (f"k{k}", v, d, None if d else 100 * i + k * 10 + v)
-                for (k, v, d) in b
-            ],
+        items = []
+        for k, v, d in b:
+            x = None if d else 100 * i + k * 10 + v
+            items.append(
+                (f"k{k}", v, d, x) + ((None if d else -x,) if extra else ())
+            )
+        rows = spark.createDataFrame(
+            items, schema + (", extra long" if extra else "")
         )
         cow.merge(rows)
         mor.merge(
             rows, write_mode="mor" if modes[i % len(modes)] else "cow"
         )
-    assert _state(cow) == _state(mor)
+        if delete_at is not None and delete_at[0] == i:
+            f = [(col, "<", delete_at[1])]
+            assert cow.delete_where(f) == mor.delete_where(f, write_mode="dv")
+        if rename_at == i:
+            cow.rename_column(col, "amount")
+            mor.rename_column(col, "amount")
+            col = "amount"
+    assert _full_state(cow) == _full_state(mor)
+    before = _full_state(mor)
+    mor.compact()
+    assert _full_state(mor) == before
 
 
 # -- disjoint-bucket conflict resolution (rebase fast path) --------------
